@@ -65,10 +65,14 @@ be a concurrent writer's merge awaiting publish and are only reclaimed
 past ``ORPHAN_GRACE_SECONDS``. The legacy unbucketed fallback remains
 single-writer (documented at the call site).
 
-Scale notes: the MERGE shuffle is one hash partition by key (the
-window dedupe) over the AFFECTED buckets only; ``n_buckets`` should
-scale with table size (buckets ≈ table_bytes / target_rewrite_bytes)
-so a daily merge touching k keys rewrites ~k/n_buckets of the table.
+Scale notes: the MERGE shuffle is one hash partition by bucket over
+the AFFECTED buckets only — the last-wins window dedupes inside it and
+the bucketed write reuses it, so neither adds an exchange. Reads and
+merges take the schema from the version's ``_SCHEMA.json``, never from
+parquet footers, so building a read submits no Spark job.
+``n_buckets`` should scale with table size (buckets ≈ table_bytes /
+target_rewrite_bytes) so a daily merge touching k keys rewrites
+~k/n_buckets of the table.
 A legacy unbucketed target (plain parquet dir, no ``_CURRENT``) takes
 the old full-rewrite + directory-swap path, kept as a fallback.
 """
@@ -87,7 +91,7 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import IntegerType, StructType
 
 from ad_data_lake_spark.commit_protocol import (
     COMMIT_KEY,
@@ -367,31 +371,36 @@ def _write_atomic(target_path: str, name: str, content: str) -> None:
 
 
 def _save_schema(version_dir: str, schema: StructType) -> None:
-    """Persist the logical schema next to the data so an all-tombstone
-    version (zero part files) still reads back as an EMPTY table with
-    the right columns instead of a schema-inference error."""
+    """Persist the logical schema next to the data. It is the version's
+    schema of record (see :func:`_load_schema`), which also lets an
+    all-tombstone version (zero part files) read back as an EMPTY
+    table with the right columns."""
     os.makedirs(version_dir, exist_ok=True)
     with open(os.path.join(version_dir, _SCHEMA_FILE), "w") as f:
         f.write(schema.json())
 
 
+def _load_schema(version_dir: str) -> StructType:
+    """The version's table schema, with the bucket column appended.
+    ``_SCHEMA.json`` is the schema of record (Delta keeps it in the log
+    for the same reason): readers pass it to ``spark.read.schema`` and
+    never infer it from parquet footers, which costs a Spark job per
+    read with ``mergeSchema`` and misses evolved columns without it."""
+    with open(os.path.join(version_dir, _SCHEMA_FILE)) as f:
+        schema = StructType.fromJson(json.load(f))
+    return schema.add(_BUCKET, IntegerType())
+
+
 def _read_version_dir(spark: SparkSession, version_dir: str) -> DataFrame:
-    """Read one version directory. mergeSchema: after a schema-evolving
-    merge the hardlinked untouched buckets still hold the old column
-    set; merged-footer reading surfaces evolved columns as nulls there
-    (exactly Delta's read behavior for files predating an ADD COLUMN).
-    A version with no bucket directories (every key tombstoned) reads
-    as an empty frame from the persisted schema."""
-    has_data = any(
-        d.startswith(f"{_BUCKET}=") for d in os.listdir(version_dir)
-    )
-    if not has_data:
-        with open(os.path.join(version_dir, _SCHEMA_FILE)) as f:
-            schema = StructType.fromJson(json.load(f))
-        return spark.createDataFrame([], schema)
-    return (
-        spark.read.option("mergeSchema", "true").parquet(version_dir).drop(_BUCKET)
-    )
+    """Read one version directory with its persisted schema. After a
+    schema-evolving merge the hardlinked untouched buckets still hold
+    the old column set; reading them with the evolved schema surfaces
+    the new columns as nulls there (exactly Delta's read behavior for
+    files predating an ADD COLUMN). A version with no bucket
+    directories (every key tombstoned) reads as an empty frame with
+    the same columns: the schema needs no data file."""
+    schema = _load_schema(version_dir)
+    return spark.read.schema(schema).parquet(version_dir).drop(_BUCKET)
 
 
 def read_merged(spark: SparkSession, target_path: str) -> DataFrame:
@@ -747,8 +756,7 @@ def _apply_bucketed_once(
 
     if prev_version is None:
         # first write: every bucket materializes
-        deduped = finalize(last_wins_dedupe(batch_b, key, order_col, tiebreak))
-        deduped.repartition(_BUCKET).write.partitionBy(_BUCKET).parquet(new_dir)
+        source = batch_b
     else:
         cur_dir = os.path.join(target_path, prev_version)
         # the touched-bucket set is bounded by n_buckets, never by data
@@ -761,37 +769,38 @@ def _apply_bucketed_once(
             for b in sorted(touched)
             if os.path.isdir(os.path.join(cur_dir, f"{_BUCKET}={b}"))
         ]
+        # the persisted schema is the table's schema in every branch:
+        # after a schema-evolving merge the version holds mixed footers
+        # (rewritten buckets carry evolved columns, hardlinked ones
+        # don't), and the new version's _SCHEMA.json must keep every
+        # column the hardlinked buckets may still hold
+        schema = _load_schema(cur_dir)
         if touched_dirs:
-            # mergeSchema is REQUIRED here: after a schema-evolving
-            # merge the version holds mixed footers (rewritten buckets
-            # carry evolved columns, hardlinked ones don't) — a single-
-            # footer inference could silently drop an evolved column
-            # from the rewrite. basePath-scoped listing keeps the
-            # footer merge O(touched buckets), not O(table).
             affected = (
-                spark.read.option("mergeSchema", "true")
+                spark.read.schema(schema)
                 .option("basePath", cur_dir)
                 .parquet(*touched_dirs)
             )
         else:
-            affected = spark.createDataFrame(
-                [], batch_b.drop(*([delete_col] if delete_col else [])).schema
-            )
+            affected = spark.createDataFrame([], schema)
         if delete_col is not None:
             affected = affected.withColumn(delete_col, F.lit(False))
         # allowMissingColumns = schema evolution: the batch may ADD
-        # columns (old rows read as null via read_merged's mergeSchema)
-        # and rewritten buckets may carry columns a given batch
-        # doesn't know about
-        deduped = finalize(
-            last_wins_dedupe(
-                affected.unionByName(batch_b, allowMissingColumns=True),
-                key,
-                order_col,
-                tiebreak,
-            )
+        # columns (old rows read as null) and rewritten buckets may
+        # carry columns a given batch doesn't know about
+        source = affected.unionByName(batch_b, allowMissingColumns=True)
+    # ONE exchange: hash by bucket, then dedupe within it. _mb is a
+    # function of the key, so every key's rows already share a
+    # partition; the window's sort orders rows by _mb first, which is
+    # also the order partitionBy(_mb) writes in, so the write adds
+    # neither a shuffle nor a sort
+    deduped = finalize(
+        last_wins_dedupe(
+            source.repartition(_BUCKET), [_BUCKET, key], order_col, tiebreak
         )
-        deduped.repartition(_BUCKET).write.partitionBy(_BUCKET).parquet(new_dir)
+    )
+    deduped.write.partitionBy(_BUCKET).parquet(new_dir)
+    if prev_version is not None:
         for d in os.listdir(cur_dir):
             if d.startswith(f"{_BUCKET}=") and int(d.split("=", 1)[1]) not in touched:
                 _link_tree(os.path.join(cur_dir, d), os.path.join(new_dir, d))

@@ -28,13 +28,22 @@ def latest_snapshot(events: DataFrame) -> DataFrame:
     )
 
 
-def last_wins_dedupe(df: DataFrame, key: str, order_col: str, tiebreak: str) -> DataFrame:
+def last_wins_dedupe(
+    df: DataFrame, key: str | list[str], order_col: str, tiebreak: str
+) -> DataFrame:
     """A7: last-wins dedupe by id. The reference gets this by dict
     overwrite in arrival order (reference
     src/extractors/api_extractor.py:144-173); Spark needs a deterministic
     rule: max(order_col), then max(tiebreak).
+
+    ``key`` is one column name or a list of names; the window partitions
+    by all of them in the given order. A caller that has already hashed
+    ``df`` by a function of the key (the lake MERGE repartitions by
+    bucket) passes ``[bucket, key]``: the existing partitioning then
+    satisfies the window's distribution, so no second shuffle runs.
     """
-    w = Window.partitionBy(key).orderBy(F.desc(order_col), F.desc(tiebreak))
+    keys = [key] if isinstance(key, str) else list(key)
+    w = Window.partitionBy(*keys).orderBy(F.desc(order_col), F.desc(tiebreak))
     return df.withColumn("rn", F.row_number().over(w)).where(F.col("rn") == 1).drop("rn")
 
 

@@ -169,9 +169,10 @@ def stream_merge_to_table(
 
     ``shuffle_partitions`` pins the per-batch MERGE's shuffle width the
     same way ``run_available_now`` pins the state-store count: a demo
-    drain's micro-batches are fixture-sized, so the merge window dedupe
-    at the session's 32 partitions is pure per-task overhead. Sized to
-    batch volume — not lowered — in production."""
+    drain's micro-batches are fixture-sized, so the MERGE's one
+    exchange (the hash partition by bucket that its last-wins window
+    dedupes within) at the session's 32 partitions is pure per-task
+    overhead. Sized to batch volume — not lowered — in production."""
 
     def _sink(batch_df: DataFrame, _batch_id: int) -> None:
         from ad_data_lake_spark.incremental import merge_upsert

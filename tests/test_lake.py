@@ -182,6 +182,104 @@ def test_merge_rewrites_only_touched_buckets(spark, events, tmp_path):
     assert got.count() == base.count()
 
 
+def _sql_plans_during(spark, fn) -> list[str]:
+    """Final physical plans of every SQL execution ``fn`` ran, read from
+    the session's SQL status store. AQE posts the final plan as a
+    listener event, so the listener bus is drained before reading."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    before = store.executionsCount()
+    fn()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = store.executionsList(before, store.executionsCount() - before)
+    return [execs.apply(i).physicalPlanDescription() for i in range(execs.size())]
+
+
+def test_versioned_reads_and_merge_keep_one_exchange(spark, events, tmp_path):
+    """Job shape of the versioned layout. Reads take the persisted
+    ``_SCHEMA.json`` instead of inferring it from parquet footers, so
+    BUILDING ``read_merged``/``read_version`` submits no Spark job. A
+    MERGE on an existing table hashes current ∪ batch once by bucket
+    and dedupes inside that partitioning: its write has exactly one
+    exchange (``hashpartitioning(_mb``), none on the key, and no sort
+    beyond the window's own."""
+    path = str(tmp_path / "job_shape_target")
+    base = events.select("event_id", "ts", "user_id", "event_type", "value")
+    incremental.merge_upsert(spark, path, base, "event_id", "ts", "value")
+    upd = (
+        base.where(F.col("event_id") % 7 == 0)
+        .withColumn("ts", F.col("ts") + F.expr("INTERVAL 1 DAY"))
+        .withColumn("value", F.lit(5.0))
+    )
+
+    plans = _sql_plans_during(
+        spark,
+        lambda: incremental.merge_upsert(spark, path, upd, "event_id", "ts", "value"),
+    )
+    writes = [p for p in plans if "InsertIntoHadoopFsRelationCommand" in p]
+    assert len(writes) == 1, plans
+    assert "== Final Plan ==" in writes[0]
+    final_tree = writes[0].split("== Initial Plan ==")[0]
+    assert final_tree.count("Exchange (") == 1, writes[0]
+    assert final_tree.count("Sort (") == 1, writes[0]
+    assert "hashpartitioning(_mb" in writes[0]
+    assert "hashpartitioning(event_id" not in writes[0]
+
+    sc = spark.sparkContext
+    group = "read-build-jobs"
+    sc.setJobGroup(group, "build versioned reads")
+    try:
+        frames = [
+            incremental.read_merged(spark, path),
+            incremental.read_version(spark, path, 1),
+            incremental.read_previous(spark, path),
+        ]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    n = base.count()
+    assert [f.count() for f in frames] == [n, n, n]
+    assert frames[0].where(F.col("value") == 5.0).count() == upd.count()
+
+
+def test_merge_into_absent_buckets_keeps_evolved_columns(spark, events, tmp_path):
+    """A merge whose keys fall only in buckets the current version does
+    not have builds the rewritten side from the previous version's
+    ``_SCHEMA.json``, not from the batch: otherwise the new version's
+    schema would drop a column that its hardlinked buckets still hold,
+    and reads that trust the persisted schema would lose the values."""
+    nb = incremental.N_MERGE_BUCKETS
+    rows = events.select("event_id", "ts", "user_id", "value").withColumn(
+        "b", incremental._bucket_expr("event_id", nb)
+    )
+    base = rows.where(F.col("b") < nb // 2).drop("b")
+    fresh = rows.where(F.col("b") >= nb // 2).drop("b").orderBy("event_id").limit(20)
+    path = str(tmp_path / "absent_buckets_t")
+    incremental.merge_upsert(spark, path, base, "event_id", "ts", "value")
+
+    evo = base.where(F.col("event_id") % 5 == 0).select(
+        "event_id",
+        (F.col("ts") + F.expr("INTERVAL 1 HOUR")).alias("ts"),
+        "user_id",
+        "value",
+        F.lit("updated").alias("status"),
+    )
+    incremental.merge_upsert(spark, path, evo, "event_id", "ts", "value")
+    cur_dir = os.path.join(path, incremental._current_version(path))
+    present = {d for d in os.listdir(cur_dir) if d.startswith("_mb=")}
+    fresh_buckets = {
+        f"_mb={r[0]}"
+        for r in fresh.select(incremental._bucket_expr("event_id", nb)).collect()
+    }
+    assert fresh_buckets and not (fresh_buckets & present)
+
+    incremental.merge_upsert(spark, path, fresh, "event_id", "ts", "value")
+    after = incremental.read_merged(spark, path)
+    assert "status" in after.columns
+    assert after.where(F.col("status") == "updated").count() == evo.count()
+    assert after.count() == base.count() + fresh.count()
+
+
 def test_merge_readers_never_see_partial_state(spark, events, tmp_path):
     """Reader atomicity: while merges run, a concurrent reader always
     resolves _CURRENT to a COMPLETE version — full row count, no

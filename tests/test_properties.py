@@ -432,8 +432,9 @@ def test_dynamic_json_python_twin_byte_equal(spark):
     """The Arrow-batched Python sanitizer (r15, the benched path) must
     stay BYTE-identical to the Catalyst expression form (the reference
     twin) — adversarial payloads over the rule alphabet: invalid JSON,
-    bare/array/null top levels, NaN/Infinity literals (Jackson rejects,
-    Python json would accept — the twin must too), duplicate keys,
+    bare/array/null top levels, NaN/Infinity literals (Jackson accepts
+    them — from_json enables ALLOW_NON_NUMERIC_NUMBERS — and renders
+    them as quoted strings; the twin must too), duplicate keys,
     unicode escapes, scalar strings that LOOK like objects/arrays,
     nested drift at every depth, big integers, and the fixture
     template's own shapes."""
