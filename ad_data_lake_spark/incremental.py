@@ -30,8 +30,8 @@ contracts are carried by an explicit bucketed + versioned layout:
   (Delta ``VERSION AS OF`` + ``VACUUM``); an ordered ``_VERSIONS``
   log records publish order so "N back" is well-defined even when a
   crashed merge leaves an orphaned directory.
-- ``read_merged`` = the pointer-resolving reader (falls back to a
-  plain parquet read for unbucketed directories).
+- ``read_merged`` = the pointer-resolving reader (a plain partitioned
+  lake without a pointer reads as plain parquet).
 - ``backfill_partitions`` = dynamic partition overwrite — only the
   partitions present in the incoming frame are replaced, everything
   else untouched: exactly ``replaceWhere`` for the written keys.
@@ -62,8 +62,7 @@ time and fails retryably rather than writing without exclusion. GC distinguishes
 logged directories (safe to remove immediately — log appends happen
 only inside the critical section) from never-logged ones, which might
 be a concurrent writer's merge awaiting publish and are only reclaimed
-past ``ORPHAN_GRACE_SECONDS``. The legacy unbucketed fallback remains
-single-writer (documented at the call site).
+past ``ORPHAN_GRACE_SECONDS``.
 
 Scale notes: the MERGE shuffle is one hash partition by bucket over
 the AFFECTED buckets only — the last-wins window dedupes inside it and
@@ -73,8 +72,9 @@ parquet footers, so building a read submits no Spark job.
 ``n_buckets`` should scale with table size (buckets ≈ table_bytes /
 target_rewrite_bytes) so a daily merge touching k keys rewrites
 ~k/n_buckets of the table.
-A legacy unbucketed target (plain parquet dir, no ``_CURRENT``) takes
-the old full-rewrite + directory-swap path, kept as a fallback.
+A MERGE into a directory that holds data but no ``_CURRENT`` pointer
+raises ``ValueError``: a directory without a log is not a table, and
+turning one into a table is an explicit re-write into a new path.
 """
 
 from __future__ import annotations
@@ -385,7 +385,8 @@ def _load_schema(version_dir: str) -> StructType:
     ``_SCHEMA.json`` is the schema of record (Delta keeps it in the log
     for the same reason): readers pass it to ``spark.read.schema`` and
     never infer it from parquet footers, which costs a Spark job per
-    read with ``mergeSchema`` and misses evolved columns without it."""
+    read when footers are merged and misses evolved columns when they
+    are not."""
     with open(os.path.join(version_dir, _SCHEMA_FILE)) as f:
         schema = StructType.fromJson(json.load(f))
     return schema.add(_BUCKET, IntegerType())
@@ -407,7 +408,8 @@ def read_merged(spark: SparkSession, target_path: str) -> DataFrame:
     """Resolve the ``_CURRENT`` pointer and read the live version.
     Readers never observe a mid-merge state: the pointer flips
     atomically (``os.replace``) from one complete version directory to
-    another. Unbucketed legacy directories read as plain parquet."""
+    another. A plain partitioned lake (no pointer) reads as plain
+    parquet."""
     version = _current_version(target_path)
     if version is None:
         return spark.read.parquet(target_path)
@@ -697,21 +699,16 @@ def _apply_bucketed_once(
     (``delete_col``), write a new version, hardlink untouched buckets,
     publish (CAS against the base version read here)."""
 
-    def finalize(deduped: DataFrame) -> DataFrame:
-        if delete_col is None:
-            return deduped
-        return deduped.where(~F.col(delete_col)).drop(delete_col)
-
     from ad_data_lake_spark.http_store import HTTP_COMMIT_MARKER
     from ad_data_lake_spark.sqlite_store import TABLE_COMMIT_DB
 
     prev_version = _current_version(target_path)
     has_foreign_content = prev_version is None and os.path.isdir(target_path) and any(
         # commit metadata (the lock file, a pre-planted sqlite or http
-        # arbiter marker and their sidecars) is NOT legacy data — a
+        # arbiter marker and their sidecars) is NOT table data — a
         # fresh versioned table whose arbiter was planted before its
-        # first merge must take the versioned path below, not this
-        # fallback
+        # first merge must take the versioned path below, not the
+        # rejection
         not (
             d == _LOCK
             or d.startswith(TABLE_COMMIT_DB)
@@ -720,27 +717,14 @@ def _apply_bucketed_once(
         for d in os.listdir(target_path)
     )
     if has_foreign_content:
-        # legacy unbucketed parquet directory: full-rewrite fallback.
-        # SINGLE-WRITER ONLY — the directory swap below has no CAS;
-        # concurrent writers are supported only on the versioned layout
-        current = spark.read.option("mergeSchema", "true").parquet(target_path)
-        if delete_col is not None:
-            current = current.withColumn(delete_col, F.lit(False))
-        deduped = finalize(
-            last_wins_dedupe(
-                current.unionByName(batch, allowMissingColumns=True),
-                key,
-                order_col,
-                tiebreak,
-            )
+        # a directory without a _CURRENT pointer is not a table: turning
+        # it into one is an explicit re-write (Delta's CONVERT TO DELTA),
+        # never a silent second write path
+        raise ValueError(
+            f"{target_path} is not a versioned (bucketed) table; convert it "
+            f"into a new path with merge_upsert(spark, new_path, "
+            f"spark.read.parquet({target_path!r}), ...)"
         )
-        staging = f"{target_path}.staging-{uuid.uuid4().hex[:8]}"
-        deduped.write.mode("overwrite").parquet(staging)
-        old = f"{target_path}.old-{uuid.uuid4().hex[:8]}"
-        os.rename(target_path, old)
-        os.rename(staging, target_path)
-        shutil.rmtree(old)
-        return
 
     stored = _stored_buckets(target_path)
     if prev_version is not None:
@@ -794,11 +778,11 @@ def _apply_bucketed_once(
     # partition; the window's sort orders rows by _mb first, which is
     # also the order partitionBy(_mb) writes in, so the write adds
     # neither a shuffle nor a sort
-    deduped = finalize(
-        last_wins_dedupe(
-            source.repartition(_BUCKET), [_BUCKET, key], order_col, tiebreak
-        )
+    deduped = last_wins_dedupe(
+        source.repartition(_BUCKET), [_BUCKET, key], order_col, tiebreak
     )
+    if delete_col is not None:
+        deduped = deduped.where(~F.col(delete_col)).drop(delete_col)
     deduped.write.partitionBy(_BUCKET).parquet(new_dir)
     if prev_version is not None:
         for d in os.listdir(cur_dir):
@@ -839,7 +823,11 @@ def merge_upsert(
     the layout — changing it would scatter keys across old buckets), a
     first write sizes from the incoming frame via ``buckets_for_bytes``
     so the count GROWS with data instead of pinning the fixture's 8.
-    The resolved count is persisted next to ``_CURRENT``."""
+    The resolved count is persisted next to ``_CURRENT``.
+
+    A ``target_path`` that holds data but no ``_CURRENT`` pointer (a
+    plain parquet directory) raises ``ValueError`` and is left as it
+    is; convert it by merging its rows into a new path."""
     _apply_bucketed(
         spark, target_path, updates, key, order_col, tiebreak, n_buckets, None
     )

@@ -221,7 +221,11 @@ def contamination_check(
     relative to the corpus (eval suites are MBs against TBs) and
     broadcasts; the corpus's exploded shingles stream past it in one
     scan — no corpus shuffle until the per-doc count aggregate on
-    doc_id, whose input is one row per (doc, distinct shingle)."""
+    doc_id, whose input is one row per (doc, distinct shingle).
+
+    Precondition: ``doc_id`` is unique per corpus row (see
+    ``dedup.doc_distinct_shingle_h60s``); duplicate rows inflate
+    ``n_shingles`` and ``n_shared``."""
     if benchmark is None:
         benchmark = corpus.where(F.col("doc_id") % benchmark_mod == 0)
         corpus = corpus.where(F.col("doc_id") % benchmark_mod != 0)
@@ -808,7 +812,6 @@ def streaming_corpus_ingest(spark, sf_dir: str) -> DataFrame:
         "content_hash",
         "_first_wins",
         "_first_wins",
-        shuffle_partitions=8,
     )
     return read_merged(spark, target).select(
         "doc_id", "content_hash", "lang", "source", "n_tokens"

@@ -31,8 +31,6 @@ from pyspark.sql.window import Window
 from ad_data_lake_spark.llm.text import (
     exploded_shingles,
     quality_columns,
-    word_shingles,
-    words,
 )
 from ad_data_lake_spark.sources.tables import spread
 
@@ -58,28 +56,6 @@ MINHASH_COEFFS: tuple[tuple[int, int], ...] = (
     (1_000_121, 806_142),
     (1_000_133, 319_708),
 )
-
-
-def shingle_base_hashes(col: Column) -> Column:
-    """28-bit integer hash per distinct shingle (md5 prefix) — the
-    one-md5-per-shingle input to the permutation family."""
-    return F.transform(
-        word_shingles(col),
-        lambda s: F.conv(F.substring(F.md5(s), 1, 7), 16, 10).cast("long"),
-    )
-
-
-def shingle_hash_set(col: Column) -> Column:
-    """60-bit hashed shingle set for Jaccard verification — long
-    equality beats string equality in the pair join, and the arrays
-    shuffle at 8 bytes/element instead of ~20-char strings. Hash
-    collisions are ~n²/2^61 and identical across engines."""
-    return F.array_distinct(
-        F.transform(
-            word_shingles(col),
-            lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long"),
-        )
-    )
 
 
 def content_hash(col: Column) -> Column:
@@ -115,29 +91,6 @@ def dedup_normalized(corpus: DataFrame) -> DataFrame:
         .groupBy("norm_hash")
         .agg(F.min("doc_id").alias("keep_doc_id"), F.count("*").alias("n_copies"))
     )
-
-
-def _perm_mins(hs: Column) -> Column:
-    """Signature array from an already-materialized base-hash array:
-    min over each (a·h + b) mod P permutation."""
-
-    def perm_min(a: int, b: int) -> Column:
-        return F.array_min(F.transform(hs, lambda h: (h * a + b) % MINHASH_P))
-
-    return F.array(*[perm_min(a, b) for a, b in MINHASH_COEFFS])
-
-
-def minhash_signature(col: Column) -> Column:
-    """MinHash signature: min over the permuted base hashes, one entry
-    per (a, b) coefficient pair. Pure per-row array math — no shuffle.
-
-    NOTE: as a single Column expression this re-evaluates the shingle
-    pipeline once per coefficient (lambda bodies are not CSE'd across
-    higher-order functions). Plan-level callers should materialize
-    ``shingle_base_hashes`` in its own projection first and apply
-    ``_perm_mins`` to the materialized column — see ``minhash_bands``,
-    which is ~40× faster than inlining this whole expression."""
-    return _perm_mins(shingle_base_hashes(col))
 
 
 def band_keys(sig: Column, n_bands: int = N_BANDS, rows: int = ROWS_PER_BAND) -> Column:
@@ -276,7 +229,12 @@ def _doc_h60_partials(batches):
 def doc_distinct_shingle_h60s(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(doc_id, h60), h60 distinct within each document — globally
     distinct as (doc_id, h60) pairs by row atomicity. md5 family only
-    (the oracle path); xxhash64 callers keep the JVM explode."""
+    (the oracle path); xxhash64 callers keep the JVM explode.
+
+    Precondition: ``id_col`` is unique per row. The per-row dedupe
+    stands in for a global distinct only under it; two rows with one
+    id emit that id's pairs twice, which inflates every per-document
+    count built on the output."""
     src = df.select(F.col(id_col).alias("doc_id"), "text")
     return spread(src).mapInPandas(_doc_h60_partials, _DOC_H60_SCHEMA)
 
@@ -795,14 +753,6 @@ def ngram_jaccard_pairs(corpus: DataFrame, mod: int = 50) -> DataFrame:
     )
 
 
-# Packed-count layout for the simhash majority vote: each bigint
-# accumulator carries SIMHASH_PACK counts in SIMHASH_FIELD_BITS-bit
-# fields, so a field saturates only past 2^20-1 (~1M) tokens in one
-# document — far beyond any sanely-chunked input (chunk first: L25).
-SIMHASH_FIELD_BITS = 20
-SIMHASH_PACK = 3
-
-
 def _simhash_partials_factory(bits: int):
     """Arrow-batch kernel for ``simhash``: the fingerprint is
     row-atomic (per-doc bit votes over the doc's own tokens), so the
@@ -866,53 +816,6 @@ def simhash(corpus: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
     return spread(corpus.select("doc_id", "text")).mapInPandas(
         _simhash_partials_factory(bits), "doc_id long, simhash long"
     )
-
-
-def _simhash_jvm(corpus: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
-    """The packed-vote JVM aggregate (the r14 form) — kept as the
-    equivalence reference for the Arrow kernel's pin test. The vote is
-    PACKED: the per-bit ±1 sum is equivalent to comparing 2×(count of
-    tokens with bit b set) against the token count, and bit-counts are
-    non-negative, so ``SIMHASH_PACK`` of them ride in disjoint 20-bit
-    fields of ONE bigint sum; integer sums are order-independent, so
-    the fingerprint is exactly the per-row array formulation's
-    value."""
-    from ad_data_lake_spark.sources.tables import spread
-
-    toks = spread(corpus).select(
-        "doc_id", F.explode(words(F.col("text"))).alias("tok")
-    )
-    h = F.conv(F.substring(F.md5(F.col("tok")), 1, 4), 16, 10).cast("long")
-    hashed = toks.select("doc_id", h.alias("h"))
-    n_longs = -(-bits // SIMHASH_PACK)
-    aggs = [F.count("*").alias("_n")]
-    for g in range(n_longs):
-        packed = None
-        for i in range(SIMHASH_PACK):
-            b = g * SIMHASH_PACK + i
-            if b >= bits:
-                break
-            term = F.when(
-                F.col("h").bitwiseAND(F.lit(1 << b)) != 0,
-                F.lit(1 << (SIMHASH_FIELD_BITS * i)),
-            ).otherwise(F.lit(0))
-            packed = term if packed is None else packed + term
-        aggs.append(F.sum(packed).alias(f"_p{g}"))
-    grouped = hashed.groupBy("doc_id").agg(*aggs)
-    mask = (1 << SIMHASH_FIELD_BITS) - 1
-    fingerprint = None
-    for g in range(n_longs):
-        for i in range(SIMHASH_PACK):
-            b = g * SIMHASH_PACK + i
-            if b >= bits:
-                break
-            cnt = F.shiftrightunsigned(
-                F.col(f"_p{g}"), SIMHASH_FIELD_BITS * i
-            ).bitwiseAND(F.lit(mask))
-            # vote_b = 2*cnt - n; >= 0 keeps the original tie rule
-            term = F.when(2 * cnt >= F.col("_n"), F.lit(1 << b)).otherwise(F.lit(0))
-            fingerprint = term if fingerprint is None else fingerprint + term
-    return grouped.select("doc_id", fingerprint.cast("long").alias("simhash"))
 
 
 def simhash_groups(corpus: DataFrame) -> DataFrame:
@@ -1065,7 +968,12 @@ def novelty_profile(corpus: DataFrame, hash_family: str = "md5") -> DataFrame:
     reproduced bit-for-bit by the DuckDB oracle; pass
     ``hash_family="xxhash64"`` for the cheaper production family.
     Documents with fewer than 3 words have no shingles and are
-    excluded (mirrored by the oracle)."""
+    excluded (mirrored by the oracle).
+
+    Precondition: ``doc_id`` is unique per row (see
+    ``doc_distinct_shingle_h60s``); duplicate rows inflate
+    ``n_shingles`` (and so deflate ``novelty_ratio``) on the md5
+    path."""
     if hash_family == "md5":
         # Arrow kernel: per-doc np.unique IS the (h60, doc_id) distinct
         # (row atomicity), zero exchange — see doc_distinct_shingle_h60s

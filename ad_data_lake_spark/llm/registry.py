@@ -29,7 +29,7 @@ _SHINGLES = (
     "list_distinct(list_transform(range(1, len(w) - 1), "
     "i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))"
 )
-# hashed-shingle forms mirroring dedup.shingle_base_hashes / _hash_set
+# hashed-shingle forms mirroring the md5 family of dedup._exploded_shingle_hashes
 _BASE_HASHES = "list_transform(shingles, s -> ('0x' || substr(md5(s), 1, 7))::BIGINT)"
 _JSET = (
     "list_distinct(list_transform(shingles, "

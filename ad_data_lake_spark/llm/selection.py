@@ -174,7 +174,11 @@ def bloom_decontaminate(
     FP tail over-flags). Probe plan: exploded shingles → one
     (doc_id, h60) dedup aggregate → bit tests against the LITERAL
     bitmap (codegen, no join, nothing broadcast but m bits) → one
-    per-doc count aggregate."""
+    per-doc count aggregate.
+
+    Precondition: ``doc_id`` is unique per row (see
+    ``dedup.doc_distinct_shingle_h60s``); duplicate rows inflate
+    ``n_shingles`` and ``n_flagged``."""
     reference = documents.where(F.col("doc_id") % benchmark_mod == 0)
     corpus = documents.where(F.col("doc_id") % benchmark_mod != 0)
     # SQL-parsed array literal: F.lit() on a 2081-element Python list

@@ -100,16 +100,6 @@ def hyperplanes(
     return planes
 
 
-def _queries(embeddings: DataFrame, pred: Column) -> DataFrame:
-    qv = as_double(F.col("embedding"))
-    return embeddings.where(pred).select(
-        F.col("vec_id").alias("query_id"),
-        qv.alias("qv"),
-        norm(qv).alias("qn"),
-        F.col("label").alias("query_label"),
-    )
-
-
 # DataType instance, not a DDL string: string return types are parsed
 # through the JVM, which would make this module unimportable before a
 # SparkSession exists.
@@ -125,14 +115,6 @@ def cosine6_pd(a: pd.Series, b: pd.Series) -> pd.Series:
         np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)
     )
     return pd.Series(np.round(sims, 6))
-
-
-def _sim(qn: Column, cn: Column) -> Column:
-    """Cosine from a fresh dot product and *precomputed* norms — norms
-    are per-vector, so computing them before the pair join does 1/3 of
-    the per-pair array work the naive cosine() would. JVM-side; for
-    large pair volumes use ``cosine6_pd``."""
-    return F.round(dot(F.col("qv"), F.col("cv")) / (qn * cn), 6)
 
 
 def _ranked(pairs: DataFrame, k: int) -> DataFrame:
@@ -350,10 +332,6 @@ def unit_vectors(embeddings: DataFrame) -> DataFrame:
     which absorbs the summation-order noise (see ``_unit_pd``)."""
     v = as_double(F.col("embedding"))
     return embeddings.select("vec_id", _unit_pd(v).alias("u"))
-
-
-def _round6_arr(arr: Column) -> Column:
-    return F.transform(arr, lambda x: F.round(x, 6))
 
 
 Centroids = list[tuple[int, list[float]]]
@@ -900,7 +878,14 @@ def _source_bytes(df: DataFrame) -> int | None:
     driver-side listing (``inputFiles()``; no job), the same probe the
     Bloom-model memo key uses. ``None`` (non-file source, listing
     failure) means "size unknown": callers take their scale-safe
-    branch."""
+    branch.
+
+    Local filesystem only: the driver ``stat``s every input file
+    (O(files)), and an object-store URI (``s3://``, ``hdfs://``) fails
+    the ``stat``, so off local disk the fast path never engages. Any
+    failed ``stat`` returns ``None`` rather than skipping the file:
+    a partial total would undercount the input and could pick the
+    broadcast path for an input of unknown size."""
     try:
         files = df.inputFiles()
     except Exception:

@@ -788,7 +788,7 @@ def streaming_json_sanitize(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan is the batch plan per micro-batch: no state, no watermark).
     The oracle is the batch sanitize SQL, so the hash match proves the
     streaming path emits byte-identical canonical JSON."""
-    from ad_data_lake_spark.functions.dynamic_json import sanitize_json_fragment
+    from ad_data_lake_spark.functions.dynamic_json import sanitize_dynamic_json
     from ad_data_lake_spark.operators.sanitize_queries import dynamic_json_payload
 
     events = _events_slim(spark, sf_dir)
@@ -798,7 +798,7 @@ def streaming_json_sanitize(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = os.path.join(_scratch(spark, "json-sanitize-src", sf_dir), "payloads")
     _stream_src_write(payloads, src)
     stream = spark.readStream.schema(payloads.schema).parquet(src)
-    out = stream.withColumn("sanitized", sanitize_json_fragment(F.col("payload")))
+    out = sanitize_dynamic_json(stream, "payload", "sanitized")
     return run_available_now(
         out, f"stream_sanitize_{uuid.uuid4().hex[:8]}", output_mode="append"
     )

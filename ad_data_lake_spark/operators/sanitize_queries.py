@@ -598,22 +598,19 @@ def sanitize_dynamic_json_events(events: DataFrame) -> DataFrame:
     for the full rule contract.
 
     Execution (r15): the rules run as ONE Arrow-batched Python pass
-    (functions/dynamic_json_py — json.loads + dict walk per row,
-    zero shuffles, input pre-projected to the two columns the pass
-    needs). The Catalyst expression form it replaced is plan-pretty
-    but every per-entry rule evaluates through INTERPRETED HOF
-    lambdas (~20 us/row over ~25 entries x 3 nesting levels);
-    interleaved A/B at sf0.1: 1.85 -> 1.10 s median, byte-identical
-    output on every fixture payload at all three SFs (also pinned by
-    tests/test_properties.py::test_dynamic_json_python_twin_byte_equal
-    on adversarial payloads). The Column form stays the reference twin
-    (functions/dynamic_json) and still serves the streaming row."""
-    from ad_data_lake_spark.functions.dynamic_json_py import (
-        sanitize_dynamic_json_pandas,
-    )
+    (``sanitize_dynamic_json`` — json.loads + dict walk per row, zero
+    shuffles, input pre-projected to the two columns the pass needs).
+    The Catalyst expression form it replaced is plan-pretty but every
+    per-entry rule evaluates through INTERPRETED HOF lambdas (~20
+    us/row over ~25 entries x 3 nesting levels); interleaved A/B at
+    sf0.1: 1.85 -> 1.10 s median, byte-identical output on every
+    fixture payload at all three SFs (also pinned against the
+    Catalyst reference form on adversarial payloads in
+    tests/test_properties.py)."""
+    from ad_data_lake_spark.functions.dynamic_json import sanitize_dynamic_json
 
     base = spread(events).select(
         "event_id",
         dynamic_json_payload(events).alias("payload"),
     )
-    return sanitize_dynamic_json_pandas(base, "payload", "sanitized")
+    return sanitize_dynamic_json(base, "payload", "sanitized")

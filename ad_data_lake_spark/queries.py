@@ -878,8 +878,9 @@ _register(
 
 def dynj_rule_sql(depth: int) -> str:
     """The DuckDB rule body of the dynamic-JSON sanitize, GENERATED for
-    an arbitrary depth from the same constants the Spark expression
-    recursion uses — the lockstep half of the cross-engine contract.
+    an arbitrary depth from the same constants the Spark sanitize
+    (functions/dynamic_json) uses — the lockstep half of the
+    cross-engine contract.
     Returns the CTE chain + final SELECT; callers prepend a ``src``
     CTE with ``(event_id, payload)``. Exposed (not just inlined into
     the registry row) so tests can regenerate BOTH engines at a
@@ -992,7 +993,7 @@ def dynj_rule_sql(depth: int) -> str:
 
 
 def _dynj_oracle_sql() -> str:
-    """DuckDB twin of functions/dynamic_json.sanitize_json_fragment on
+    """DuckDB twin of functions/dynamic_json.sanitize_dynamic_json on
     the registry fixture payload: json_keys + json_extract_string
     expose the same permissive view Spark's map<string,string> parse
     does; the rule CASE chain is generated at SANITIZE_DEPTH by

@@ -114,12 +114,6 @@ def load_tables(spark: SparkSession, sf_dir: str | None = None) -> dict[str, Dat
     return {name: load_table(spark, name, sf_dir) for name in TABLE_NAMES}
 
 
-def register_temp_views(spark: SparkSession, sf_dir: str | None = None) -> None:
-    """Register every fixture table as a temp view for ``spark.sql`` use."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
-
-
 def spread(df: DataFrame) -> DataFrame:
     """Fan a narrow scan out to session parallelism for COMPUTE-BOUND
     transforms (heavy expression trees, sketching, Arrow UDFs).

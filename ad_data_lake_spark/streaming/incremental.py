@@ -151,7 +151,6 @@ def stream_merge_to_table(
     key: str,
     order_col: str,
     tiebreak: str,
-    shuffle_partitions: int | None = None,
 ) -> None:
     """The production sink this module's header promises: ``foreachBatch``
     → ``incremental.merge_upsert``. Structured Streaming guarantees
@@ -165,14 +164,7 @@ def stream_merge_to_table(
 
     At scale the same shape runs continuously (drop ``availableNow``):
     the per-batch MERGE cost is bounded by batch size × table bucketing,
-    not stream history.
-
-    ``shuffle_partitions`` pins the per-batch MERGE's shuffle width the
-    same way ``run_available_now`` pins the state-store count: a demo
-    drain's micro-batches are fixture-sized, so the MERGE's one
-    exchange (the hash partition by bucket that its last-wins window
-    dedupes within) at the session's 32 partitions is pure per-task
-    overhead. Sized to batch volume — not lowered — in production."""
+    not stream history."""
 
     def _sink(batch_df: DataFrame, _batch_id: int) -> None:
         from ad_data_lake_spark.incremental import merge_upsert
@@ -181,22 +173,13 @@ def stream_merge_to_table(
             batch_df.sparkSession, target_path, batch_df, key, order_col, tiebreak
         )
 
-    spark = stream_df.sparkSession
-    conf_key = "spark.sql.shuffle.partitions"
-    saved = spark.conf.get(conf_key) if shuffle_partitions is not None else None
-    if shuffle_partitions is not None:
-        spark.conf.set(conf_key, str(shuffle_partitions))
-    try:
-        q = (
-            stream_df.writeStream.foreachBatch(_sink)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if saved is not None:
-            spark.conf.set(conf_key, saved)
+    q = (
+        stream_df.writeStream.foreachBatch(_sink)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
 
 
 def batch_equivalent(events: DataFrame) -> DataFrame:

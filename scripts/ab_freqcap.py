@@ -3,11 +3,9 @@ Arrow state round trips) vs streaming_frequency_cap_batchwise
 (foreachBatch: JVM window numbering + a versioned per-user offsets
 table, zero Python in the row path) — VERDICT r11 ask #6.
 
-transformWithStateInPandas (the third candidate) is ENVIRONMENT-
-BLOCKED here: its driver worker imports google.protobuf
-(pyspark/sql/streaming/proto/StateMessage_pb2), absent from this
-container with installs disallowed — pinned in
-tests/test_lake.py::test_transform_with_state_env_gate.
+transformWithStateInPandas is not a candidate: its driver worker
+imports google.protobuf (pyspark/sql/streaming/proto/StateMessage_pb2),
+so it runs only where protobuf is installed.
 
 Method: the bench_streaming discipline — warm pass discarded, min of
 two timed passes; wall = the WHOLE registry callable (fixture write +

@@ -292,9 +292,7 @@ def test_dynamic_json_sanitize_rules(spark):
     scalar rules, objects BELOW the cap and non-collection arrays pass
     through verbatim, and INVALID JSON passes through unchanged (drift
     never kills the batch)."""
-    from pyspark.sql import functions as F
-
-    from ad_data_lake_spark.functions.dynamic_json import sanitize_json_fragment
+    from ad_data_lake_spark.functions.dynamic_json import sanitize_dynamic_json
 
     rows = [
         ('{"zz_unknown":"42","a_id":"042","gone":"  ","keep":"x"}',),
@@ -304,12 +302,7 @@ def test_dynamic_json_sanitize_rules(spark):
         ('{"neg":"-7","dec":" -1.50 ","exotic":"1e3","bool":"false"}',),
     ]
     df = spark.createDataFrame(rows, "payload string")
-    got = [
-        r.s
-        for r in df.select(
-            sanitize_json_fragment(F.col("payload")).alias("s")
-        ).collect()
-    ]
+    got = [r.s for r in sanitize_dynamic_json(df, "payload", "s").collect()]
     assert got[0] == '{"a_id":"042","keep":"x","zz_unknown":42}'
     assert got[1] == '{"other":[" a ",""],"special_ad_categories":["a","b"]}'
     # depth 3: outer, mid, AND mid's scalar children sanitized (pad
@@ -320,7 +313,7 @@ def test_dynamic_json_sanitize_rules(spark):
     assert got[4] == '{"bool":false,"dec":-1.50,"exotic":"1e3","neg":-7}'
 
 
-def test_dynamic_json_depth_generator_generalizes(spark):
+def test_dynamic_json_depth_generator_generalizes():
     """The r8 verdict's ask #5: regenerate BOTH engines at depth=4 from
     the same constant and hash-match on a depth-4-drifted payload —
     proving the lockstep GENERATOR generalizes, not just the shipped
@@ -331,10 +324,7 @@ def test_dynamic_json_depth_generator_generalizes(spark):
     import duckdb
     import pandas as pd
 
-    from ad_data_lake_spark.functions.dynamic_json import (
-        SANITIZE_DEPTH,
-        sanitize_json_fragment,
-    )
+    from ad_data_lake_spark.functions.dynamic_json import SANITIZE_DEPTH, _sanitize
     from ad_data_lake_spark.queries import dynj_rule_sql
     from tests.oracle_compare import assert_frames_match
 
@@ -352,14 +342,9 @@ def test_dynamic_json_depth_generator_generalizes(spark):
         )
         for i in range(40)
     ]
-    df = spark.createDataFrame(payloads, "event_id long, payload string")
-    spark_pdf = (
-        df.select(
-            "event_id",
-            "payload",
-            sanitize_json_fragment(F.col("payload"), depth=4).alias("sanitized"),
-        )
-        .toPandas()
+    lib_pdf = pd.DataFrame(
+        [(i, p, _sanitize(p, depth=4)) for i, p in payloads],
+        columns=["event_id", "payload", "sanitized"],
     )
     con = duckdb.connect()
     con.register("fixture", pd.DataFrame(payloads, columns=["event_id", "payload"]))
@@ -367,20 +352,15 @@ def test_dynamic_json_depth_generator_generalizes(spark):
         "WITH src AS (SELECT event_id, payload FROM fixture),\n"
         + dynj_rule_sql(4)
     ).df()
-    assert_frames_match(spark_pdf, duck_pdf, "dynj_depth4")
+    assert_frames_match(lib_pdf, duck_pdf, "dynj_depth4")
 
     # the depth-4 drift actually got the rules (not a vacuous match)
-    s = spark_pdf.sort_values("event_id")["sanitized"].iloc[1]
+    s = lib_pdf.sort_values("event_id")["sanitized"].iloc[1]
     assert '"q":1' in s and '"asset_id":"9"' in s and '"ratio":2.50' in s
     assert '"gone"' not in s
     assert '"bottom":{"keep":"01"}' in s  # depth-5: verbatim at the new cap
     # and at the SHIPPED depth the same payload passes 'deeper' through
-    d3 = (
-        df.select(sanitize_json_fragment(F.col("payload")).alias("s"))
-        .limit(1)
-        .collect()[0]
-        .s
-    )
+    d3 = _sanitize(payloads[0][1])
     assert '"gone":""' in d3  # depth-4 keys untouched at depth 3
 
 

@@ -320,21 +320,30 @@ def test_merge_readers_never_see_partial_state(spark, events, tmp_path):
     assert incremental.read_merged(spark, path).count() == n
 
 
-def test_merge_legacy_unbucketed_fallback(spark, events, tmp_path):
-    """A pre-existing plain parquet directory (no _CURRENT pointer)
-    still merges via the full-rewrite swap path."""
-    path = str(tmp_path / "legacy_target")
+def test_merge_into_unversioned_dir_rejected(spark, events, tmp_path):
+    """A plain parquet directory (no _CURRENT pointer) is not a table:
+    merge_upsert and cdc_apply raise ValueError naming the path and the
+    conversion, and leave every file of the directory as it was."""
+    path = str(tmp_path / "plain_target")
     base = events.select("event_id", "ts", "user_id", "event_type", "value")
     base.write.parquet(path)  # unbucketed, written outside merge_upsert
-    updates = (
-        base.orderBy("event_id").limit(10)
-        .withColumn("ts", F.col("ts") + F.expr("INTERVAL 5 DAYS"))
-        .withColumn("value", F.lit(111.0))
-    )
-    incremental.merge_upsert(spark, path, updates, "event_id", "ts", "value")
-    got = incremental.read_merged(spark, path)
-    assert got.count() == base.count()
-    assert got.where(F.col("value") == 111.0).count() == 10
+
+    def listing():
+        return sorted(
+            (os.path.relpath(os.path.join(root, f), path),
+             os.path.getsize(os.path.join(root, f)))
+            for root, _dirs, files in os.walk(path)
+            for f in files
+        )
+
+    before = listing()
+    updates = base.orderBy("event_id").limit(10)
+    for apply in (incremental.merge_upsert, incremental.cdc_apply):
+        with pytest.raises(ValueError, match="not a versioned") as exc:
+            apply(spark, path, updates, "event_id", "ts", "value")
+        assert path in str(exc.value)
+        assert "merge_upsert(spark, new_path, spark.read.parquet(" in str(exc.value)
+    assert listing() == before
 
 
 def test_backfill_replaces_only_target_partition(spark, events, tmp_path):
@@ -1590,46 +1599,6 @@ def test_publish_cas_across_processes(tmp_path, backend):
     # every retained version's directory exists (nothing GC'd wrongly)
     for v in history:
         assert os.path.isdir(os.path.join(target, v)), v
-
-
-def test_transform_with_state_env_gate(spark, events, tmp_path):
-    """transformWithStateInPandas (the third frequency-cap form, r11
-    ask #6) is environment-blocked: its driver worker imports
-    google.protobuf at query start and this container has no protobuf
-    (installs disallowed). While that holds, this test documents the
-    gate by skipping; the moment the environment provides protobuf it
-    RUNS the tws form and asserts batch equivalence — the gate
-    self-lifts instead of rotting."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithStateInPandas driver worker needs protobuf "
-        "(absent in this container; documented in scripts/ab_freqcap.py)",
-    )
-    from ad_data_lake_spark.operators.sessions import frequency_cap
-    from ad_data_lake_spark.streaming.stateful import streaming_frequency_cap_tws
-
-    slim = events.select("event_id", "user_id", "ts")
-    src = str(tmp_path / "captws_src")
-    slim.write.mode("overwrite").parquet(src)
-    saved = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = spark.readStream.schema(slim.schema).parquet(src)
-        out = run_available_now(
-            streaming_frequency_cap_tws(stream), "cap_tws", output_mode="append"
-        )
-        batch = frequency_cap(events).select(
-            "event_id", "user_id", "ts", "impression_no", "capped"
-        )
-        assert _table_hash(out) == _table_hash(batch)
-    finally:
-        if saved is not None:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", saved
-            )
 
 
 # ---------------------------------------------------------------------------

@@ -1339,9 +1339,12 @@ def test_minhash_prepped_arrow_matches_jvm_aggregate(documents):
 
 def test_simhash_arrow_matches_jvm_vote(documents):
     """The r15 Arrow simhash kernel must match the JVM packed-vote
-    aggregate (kept as D._simhash_jvm) fingerprint-for-fingerprint —
-    same md5-prefix bit source, same 2·cnt ≥ n tie rule."""
-    a = sorted(map(tuple, D._simhash_jvm(documents).collect()))
+    aggregate (tests/reference_forms.simhash_jvm)
+    fingerprint-for-fingerprint — same md5-prefix bit source, same
+    2·cnt ≥ n tie rule."""
+    from tests.reference_forms import simhash_jvm
+
+    a = sorted(map(tuple, simhash_jvm(documents).collect()))
     b = sorted(map(tuple, D.simhash(documents).collect()))
     assert a == b
     assert len(a) > 0

@@ -146,9 +146,7 @@ def test_dynamic_json_sanitize_idempotent(spark):
     strings, paddings, empties, id-keys, collections, nesting)."""
     import json as _json
 
-    from pyspark.sql import functions as F
-
-    from ad_data_lake_spark.functions.dynamic_json import sanitize_json_fragment
+    from ad_data_lake_spark.functions.dynamic_json import sanitize_dynamic_json
 
     rng = random.Random(7)
     vals = ['"007"', '" 12.5"', '""', '"x y"', '"true"', "3", '"-8"',
@@ -160,11 +158,8 @@ def test_dynamic_json_sanitize_idempotent(spark):
         body = ",".join(f'"{k}":{rng.choice(vals)}' for k in ks)
         rows.append(("{" + body + "}",))
     df = spark.createDataFrame(rows, "payload string")
-    once = sanitize_json_fragment(F.col("payload"))
-    out = df.select(
-        once.alias("s1"),
-        sanitize_json_fragment(once).alias("s2"),
-    ).collect()
+    once = sanitize_dynamic_json(df, "payload", "s1")
+    out = sanitize_dynamic_json(once, "s1", "s2").collect()
     for r in out:
         assert r.s1 == r.s2, f"not a fixpoint: {r.s1!r} -> {r.s2!r}"
         _json.loads(r.s1)  # and the canonical form is valid JSON
@@ -428,22 +423,14 @@ def test_commit_protocol_invariants_under_random_schedules(ops, retain):
             assert state.current == current
 
 
-def test_dynamic_json_python_twin_byte_equal(spark):
-    """The Arrow-batched Python sanitizer (r15, the benched path) must
-    stay BYTE-identical to the Catalyst expression form (the reference
-    twin) — adversarial payloads over the rule alphabet: invalid JSON,
-    bare/array/null top levels, NaN/Infinity literals (Jackson accepts
-    them — from_json enables ALLOW_NON_NUMERIC_NUMBERS — and renders
-    them as quoted strings; the twin must too), duplicate keys,
-    unicode escapes, scalar strings that LOOK like objects/arrays,
-    nested drift at every depth, big integers, and the fixture
-    template's own shapes."""
+def _sanitize_corpus() -> list[str]:
+    """Adversarial payloads over the dynamic-JSON rule alphabet: invalid
+    JSON, bare/array/null top levels, NaN/Infinity literals (Jackson
+    accepts them — from_json enables ALLOW_NON_NUMERIC_NUMBERS — and
+    renders them as quoted strings), duplicate keys, unicode escapes,
+    scalar strings that LOOK like objects/arrays, nested drift at every
+    depth, big integers, and the fixture template's own shapes."""
     import random
-
-    from pyspark.sql import functions as F
-
-    from ad_data_lake_spark.functions.dynamic_json import sanitize_json_fragment
-    from ad_data_lake_spark.functions.dynamic_json_py import _sanitize
 
     fixed = [
         "not json at all",
@@ -480,7 +467,19 @@ def test_dynamic_json_python_twin_byte_equal(spark):
         ks = rng.sample(keys, rng.randrange(1, len(keys) + 1))
         body = ",".join(f'"{k}":{rng.choice(vals)}' for k in ks)
         payloads.append("{" + body + "}")
+    return payloads
 
+
+def test_dynamic_json_python_twin_byte_equal(spark):
+    """The Arrow-batched Python sanitizer (the library path) must stay
+    BYTE-identical to the Catalyst expression form (the reference form
+    in tests/reference_forms.py) on the adversarial corpus."""
+    from pyspark.sql import functions as F
+
+    from ad_data_lake_spark.functions.dynamic_json import _sanitize
+    from tests.reference_forms import sanitize_json_fragment
+
+    payloads = _sanitize_corpus()
     df = spark.createDataFrame([(p,) for p in payloads], "payload string")
     ref = [
         r.s
@@ -491,3 +490,31 @@ def test_dynamic_json_python_twin_byte_equal(spark):
     got = [_sanitize(p) for p in payloads]
     for p, a, b in zip(payloads, ref, got):
         assert a == b, f"twin diverged on {p!r}:\n catalyst={a!r}\n python={b!r}"
+
+
+def test_dynamic_json_streaming_matches_batch(spark, tmp_path):
+    """The library sanitizer under Structured Streaming (a parquet file
+    stream drained with availableNow) emits byte-identical output to
+    the same call on a batch frame, over the adversarial corpus plus a
+    single-quoted payload — which the strict-JSON contract passes
+    through verbatim on both paths."""
+    from ad_data_lake_spark.functions.dynamic_json import sanitize_dynamic_json
+    from ad_data_lake_spark.streaming import run_available_now
+
+    sq = "{'sq': '1'}"
+    payloads = _sanitize_corpus() + [sq]
+    df = spark.createDataFrame(list(enumerate(payloads)), "id long, payload string")
+    src = str(tmp_path / "payloads")
+    df.write.parquet(src)
+    stream = spark.readStream.schema(df.schema).parquet(src)
+    streamed = run_available_now(
+        sanitize_dynamic_json(stream, "payload", "s"),
+        "sanitize_parity",
+        output_mode="append",
+    )
+    got = {r.id: r.s for r in streamed.collect()}
+    want = {r.id: r.s for r in sanitize_dynamic_json(df, "payload", "s").collect()}
+    assert len(got) == len(payloads)
+    for i, p in enumerate(payloads):
+        assert got[i] == want[i], f"stream diverged on {p!r}:\n {got[i]!r}\n {want[i]!r}"
+    assert got[len(payloads) - 1] == sq
